@@ -1,11 +1,13 @@
-"""Spectral transforms (SURVEY §2.3 T1-T5): DFT / MFT as Arrow-batched
-pandas UDFs over the array form.
+"""Spectral transforms (SURVEY §2.3 T1-T5): the whole-series DFT as a
+JVM array expression, the sliding MFT as an Arrow-batched pandas UDF.
 
 Reference parity (behavioral, re-derived in numpy):
   * DFT.transform (`/root/reference/src/main/java/sfa/transformation/DFT.java:17-51`):
     zero-pad to next pow-2, real FFT, zero the packed Re[n/2] slot,
     take l values from startOffset=2 (drops DC), scale 1/√N, negate
     imaginary entries (conjugate/e^{+i} storage convention).
+    ``dft_values`` is the numpy reference; ``dft`` computes the same
+    values as trig sums inside the JVM.
   * MFT.transform (`.../transformation/MFT.java:65-88`): FFT of the
     first windowSize points (no padding), startOffset = 2 if normMean
     else 0, norm = 1/√w if lowerBounding.
@@ -14,9 +16,11 @@ Reference parity (behavioral, re-derived in numpy):
     X_k(t) = (X_k(t−1) + x[t+w−1] − x[t−1]) · e^{+2πik/w},
     then per-window 1/σ_t normalization (normalizeFT, `MFT.java:267-276`).
 
-Scale notes: parallelism is across series (one Arrow batch holds many
-series); within a batch everything is vectorized numpy. Two methods for
-the all-windows transform:
+Scale notes: the DFT keeps l coefficients of one series, l·N
+multiply-adds per row evaluated in the JVM — no Python worker.
+The MFT emits every window of a series, so it stays in numpy, with
+parallelism across series (one Arrow batch holds many series) and two
+methods for the all-windows transform:
   * 'fft'        — sliding_window_view + rfft: O(n·w log w), fastest
                    for the classification regime (short windows).
   * 'recurrence' — the reference's O(n·l) update, vectorized over k;
@@ -25,9 +29,11 @@ the all-windows transform:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -165,14 +171,48 @@ def mft_all_windows(
     return out * norm
 
 
+def _padded_size(n: Column) -> Column:
+    """Next power of two ≥ n (1 for n ≤ 1), in integer arithmetic:
+    1 << bit_length(n − 1)."""
+    one = F.lit(1).cast("bigint")
+    return F.when(n <= 1, one).otherwise(
+        F.call_function("shiftleft", one, F.length(F.bin(n - 1)))
+    )
+
+
 def dft(arrays: DataFrame, l: int, pad_pow2: bool = True) -> DataFrame:
-    """(series_id, values) → (series_id, coefs array<double> of length l)."""
+    """(series_id, values, …) → the same columns + coefs array<double>
+    of length l, equal to ``dft_values`` of each row's values.
 
-    @pandas_udf("array<double>")
-    def _dft(vals: pd.Series) -> pd.Series:
-        return vals.map(lambda v: dft_values(np.asarray(v, dtype=np.float64), l, pad_pow2))
+    Value 2(k−1) is Σ_j x_j·cos(2πkj/N)/√N and value 2(k−1)+1 is
+    Σ_j x_j·sin(2πkj/N)/√N, N the padded length; coefficients past N/2
+    (and the last slot of an odd l) are 0.
 
-    return arrays.select("series_id", _dft("values").alias("coefs"))
+    N is projected once per row BEFORE the sums: referenced from inside
+    the per-element lambda, its expression would be evaluated per
+    element. Catalyst keeps the two projections apart because every
+    coefficient references N.
+    """
+    n = F.size("values")
+    sized = arrays.select(
+        "*", (_padded_size(n) if pad_pow2 else n.cast("bigint")).alias("_nfft")
+    )
+    nfft = F.col("_nfft")
+
+    def coef(k: int, trig) -> Column:
+        w = F.lit(2 * math.pi * k)
+        total = F.aggregate(
+            F.transform("values", lambda x, j: x * trig(w * j / nfft)),
+            F.lit(0.0),
+            lambda acc, t: acc + t,
+        )
+        return F.when(F.lit(2 * k) <= nfft, total / F.sqrt(nfft)).otherwise(0.0)
+
+    vals = [
+        coef(i // 2 + 1, F.sin if i % 2 else F.cos) if i < l - l % 2 else F.lit(0.0)
+        for i in range(l)
+    ]
+    return sized.select(*arrays.columns, F.array(*vals).alias("coefs"))
 
 
 def mft_sliding(
@@ -205,7 +245,13 @@ def mft_sliding(
 
 
 def coefs_to_long(coef_arrays: DataFrame, win_col: str = "win") -> DataFrame:
-    """(series_id[, win], coefs) → long form (series_id, win, seg, coef)."""
+    """(series_id[, win], coefs) → long form (series_id, win, seg, coef).
+
+    posexplode_OUTER: ``dft`` and ``mft_sliding`` always emit l values,
+    so it yields the same rows as posexplode. Plain posexplode makes
+    Catalyst infer a ``size(coefs) > 0`` filter and push it below the
+    projections, which inlines the whole coefficient expression into a
+    scan-side Filter and evaluates it twice per row."""
     cols = ["series_id"]
     if win_col in coef_arrays.columns:
         cols.append(win_col)
@@ -213,5 +259,5 @@ def coefs_to_long(coef_arrays: DataFrame, win_col: str = "win") -> DataFrame:
         coef_arrays = coef_arrays.withColumn(win_col, F.lit(0).cast("bigint"))
         cols.append(win_col)
     return coef_arrays.select(
-        *cols, F.posexplode("coefs").alias("seg", "coef")
+        *cols, F.posexplode_outer("coefs").alias("seg", "coef")
     ).withColumn("seg", F.col("seg").cast("int"))

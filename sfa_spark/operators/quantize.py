@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 EPS = 1e-12
@@ -143,6 +143,45 @@ def fit_equi_depth_bins(
     key_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in in_schema)
     return coef_long.select(*ks, "seg", "coef").groupBy(*ks, "seg").applyInPandas(
         _scan, schema=f"{key_fields}, bins array<double>"
+    )
+
+
+def equi_depth_bounds(orderline: Column, alphabet: int) -> Column:
+    """The reference equi-depth scan (``_scan`` in fit_equi_depth_bins,
+    SFA.divideEquiDepthHistogram `SFA.java:436-450`) as one JVM fold
+    over an ASCENDING array: for the orderline of one coefficient held
+    as an array, it yields the same ≤ alphabet−1 boundaries."""
+    depth = F.size(orderline) / F.lit(alphabet)
+
+    def step(acc, v):
+        cnt = acc["cnt"] + 1
+        pos = F.size(acc["bins"])
+        take = (
+            (pos < alphabet - 1)
+            & (cnt > F.ceil(depth * (pos + 1)))
+            # CASE, not OR: element_at(−1) of the empty list would raise
+            & F.when(pos == 0, F.lit(True)).otherwise(
+                F.element_at(acc["bins"], -1) != v
+            )
+        )
+        bins = F.when(take, F.concat(acc["bins"], F.array(v))).otherwise(acc["bins"])
+        return F.struct(cnt.alias("cnt"), bins.alias("bins"))
+
+    init = F.struct(
+        F.lit(0).alias("cnt"), F.array().cast("array<double>").alias("bins")
+    )
+    return F.aggregate(orderline, init, step, lambda acc: acc["bins"])
+
+
+def quantize_array(coefs: Column, bins: list[list[float]]) -> Column:
+    """Array form of quantize_with_bins: symbol i = #boundaries of
+    coefficient i that are <= coefs[i], with the boundaries inlined as
+    a literal (bins[i] for coefficient i)."""
+    blit = F.array(
+        *[F.array(*[F.lit(float(b)) for b in bs]).cast("array<double>") for bs in bins]
+    )
+    return F.zip_with(
+        coefs, blit, lambda v, bs: F.size(F.filter(bs, lambda b: v >= b))
     )
 
 

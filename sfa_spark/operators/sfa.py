@@ -16,14 +16,16 @@ Reference parity:
 Spark shape: fit = pandas-UDF MFT → explode to coefficient long form →
 group-aggregate binning (equi-width pure SQL, equi-depth exact
 percentile, IG grouped applyInPandas). The fitted model is a tiny bins
-table — broadcast into every transform. No driver-side loops over
-series anywhere.
+table — broadcast into every transform. fit_whole (the index path) is
+Python-free: JVM DFT → one aggregate whose boundaries land on the
+driver. No driver-side loops over series anywhere.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,6 +35,13 @@ from sfa_spark.operators import select as SEL
 from sfa_spark.operators import words as WD
 
 HISTOGRAMS = ("equi_depth", "equi_width", "information_gain")
+
+
+def local_frame(spark, columns: dict[str, list], schema: str) -> DataFrame:
+    """A small driver-side table as a JVM LocalRelation (built through
+    Arrow): collecting it runs no Spark job and writing it no Python
+    worker, unlike createDataFrame over a Python list."""
+    return spark.createDataFrame(pd.DataFrame(columns, dtype=object), schema)
 
 
 @dataclass
@@ -49,18 +58,17 @@ class SFAModel:
     def save(self, path: str) -> None:
         """Persist as parquet (reference uses Kryo; parquet is the
         Spark-native artifact: columnar, schema'd, partition-prunable)."""
-        meta = self.bins.sparkSession.createDataFrame(
-            [
-                (
-                    self.word_length,
-                    self.alphabet,
-                    self.window,
-                    self.norm_mean,
-                    self.lower_bounding,
-                    self.best_segs,
-                    self.fit_l,
-                )
-            ],
+        meta = local_frame(
+            self.bins.sparkSession,
+            {
+                "word_length": [self.word_length],
+                "alphabet": [self.alphabet],
+                "window": [self.window],
+                "norm_mean": [self.norm_mean],
+                "lower_bounding": [self.lower_bounding],
+                "best_segs": [self.best_segs],
+                "fit_l": [self.fit_l],
+            },
             "word_length int, alphabet int, window int, norm_mean boolean, "
             "lower_bounding boolean, best_segs array<int>, fit_l int",
         )
@@ -169,7 +177,7 @@ def fit(
 
 
 def fit_whole(
-    arrays: DataFrame,
+    coefs: DataFrame,
     word_length: int = 16,
     alphabet: int = 8,
     histogram: str = "equi_width",
@@ -177,44 +185,55 @@ def fit_whole(
 ) -> SFAModel:
     """Fit bins on WHOLE-series DFTs (the indexing path: reference
     buildIndexWholeMatching fits on each full series, SFATrie.java:108-133;
-    equi-width, alphabet 8 are the trie defaults)."""
-    coefs = spectral.dft(arrays, word_length, pad_pow2=True)
-    long = spectral.coefs_to_long(coefs).withColumn("coef", F.round("coef", 2))
+    equi-width, alphabet 8 are the trie defaults).
+
+    coefs: whole-series DFTs, a ``coefs`` column of word_length values
+    (``spectral.dft(arrays, word_length)``). One aggregate over those
+    arrays, collected to the driver:
+    per coefficient the min/max of the 2-dp orderline (equi-width), its
+    sorted orderline scanned as the reference does (equi-depth), or its
+    approximate percentiles (equi-depth with quantile_error > 0). The
+    model's bins table is built from those driver-side boundaries."""
+    if histogram not in ("equi_width", "equi_depth"):
+        raise ValueError("whole-series bins are equi_width or equi_depth")
+    # reference orderline rounding (SFA.java:402)
+    vals = [F.round(F.element_at("coefs", i + 1), 2) for i in range(word_length)]
     if histogram == "equi_width":
-        stats = long.groupBy("seg").agg(
-            F.min("coef").alias("vmin"), F.max("coef").alias("vmax")
-        )
-        step = (F.col("vmax") - F.col("vmin")) / alphabet
-        bins = stats.select(
-            "seg",
-            F.when(step <= 0, F.array(*[F.lit(float("inf"))] * (alphabet - 1)))
-            .otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(alphabet - 1)),
-                    lambda i: F.col("vmin") + i * step,
-                )
-            )
-            .alias("bins"),
-        )
+        aggs = [F.array(F.min(v), F.max(v)) for v in vals]
+    elif quantile_error > 0:
+        qs = F.array(*[F.lit(i / alphabet) for i in range(1, alphabet)])
+        acc = max(1, int(1.0 / quantile_error))
+        aggs = [F.percentile_approx(v, qs, acc) for v in vals]
     else:
-        bins = QZ.fit_equi_depth_bins(long, alphabet, relative_error=quantile_error)
+        aggs = [
+            QZ.equi_depth_bounds(F.array_sort(F.collect_list(v)), alphabet)
+            for v in vals
+        ]
+    n, *per_coef = coefs.agg(F.count(F.lit(1)), *aggs).first()
+    if n == 0:
+        raise ValueError("cannot fit SFA bins on an empty input")
+    if histogram == "equi_width":
+        bins = []
+        for vmin, vmax in per_coef:
+            step = (vmax - vmin) / alphabet
+            bins.append(
+                [float("inf")] * (alphabet - 1) if step <= 0
+                else [vmin + i * step for i in range(1, alphabet)]
+            )
+    else:
+        bins = [list(b) for b in per_coef]
     return SFAModel(
         word_length=word_length,
         alphabet=alphabet,
         window=0,
         norm_mean=False,
         lower_bounding=True,
-        bins=bins.cache(),
+        bins=local_frame(
+            coefs.sparkSession,
+            {"seg": list(range(len(bins))), "bins": bins},
+            "seg int, bins array<double>",
+        ),
     )
-
-
-def transform_whole_long(model: SFAModel, arrays: DataFrame) -> DataFrame:
-    """Whole-series transform keeping both symbols and DFT values:
-    (series_id, seg, coef, symbol) — the indexing path needs the DFT
-    values for lower-bound distances, not just the packed word."""
-    coefs = spectral.dft(arrays, model.word_length, pad_pow2=True)
-    long = spectral.coefs_to_long(coefs)
-    return QZ.quantize_with_bins(long, model.bins)
 
 
 def fit_supervised(
@@ -290,13 +309,3 @@ def transform_windowing(model: SFAModel, arrays: DataFrame) -> DataFrame:
     return WD.pack_words(
         sym.select("series_id", "win", "seg", "symbol"), model.alphabet
     )
-
-
-def transform(model: SFAModel, arrays: DataFrame) -> DataFrame:
-    """Whole-series words (one word per series): DFT → quantize → pack."""
-    coefs = spectral.dft(arrays, model.word_length, pad_pow2=True)
-    long = spectral.coefs_to_long(coefs)
-    sym = QZ.quantize_with_bins(long, model.bins)
-    return WD.pack_words(
-        sym.select("series_id", "win", "seg", "symbol"), model.alphabet
-    ).drop("win")

@@ -26,16 +26,21 @@ Reference parity (re-architected for Spark):
 Scale: the fact table never shuffles at query time — Phase 1/2 are
 scans with partition-pruned predicates; the summary table is
 prefix-cardinality-sized (≤ alphabet^d rows) and broadcast/collected.
-Exact distances are JVM fold expressions (whole-stage codegen).
+The DFT, the symbols and the exact distances are JVM array expressions
+over each row, with the bins inlined as literals from the driver, so
+neither the build nor a query starts a Python worker.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sfa_spark.functions import spectral
+from sfa_spark.operators import quantize as QZ
 from sfa_spark.operators import sfa as SFA
 
 
@@ -60,14 +65,13 @@ def _box_lb(qcols: list, mins, maxs):
     return total
 
 
-def _sfa_row_lb(qdft_col, syms_col, bins_map: dict[int, list[float]], l: int):
+def _sfa_row_lb(qdft_col, syms_col, bins: list[list[float]]):
     """Squared SFA lower bound (SFADistance.java:22-67) as a codegen'd
     expression: per coefficient, gap from the query's DFT value to the
     candidate symbol's bin interval, 2·gap² summed. CASE branches guard
     the ANSI element_at bounds."""
     total = F.lit(0.0)
-    for i in range(l):
-        bs = bins_map.get(i, [])
+    for i, bs in enumerate(bins):
         if not bs:
             continue
         v = F.element_at(qdft_col, i + 1)
@@ -88,6 +92,31 @@ class SFAIndex:
     model: SFA.SFAModel
     prefix_len: int
 
+    @cached_property
+    def bins(self) -> list[list[float]]:
+        """The model's boundaries on the driver, list index = coefficient.
+        Read once per handle; every build and query expression inlines
+        them as literals."""
+        rows = sorted(self.model.bins.collect(), key=lambda r: r["seg"])
+        return [list(r["bins"]) for r in rows]
+
+    @cached_property
+    def data(self) -> DataFrame:
+        """path/data, listed once per handle (the files never change
+        after the build)."""
+        return self.model.bins.sparkSession.read.parquet(f"{self.path}/data")
+
+    @cached_property
+    def summary(self) -> DataFrame:
+        """path/summary, read with its known schema (no inference job)."""
+        schema = ", ".join(
+            [f"p{i} int" for i in range(self.prefix_len)]
+            + ["mins array<double>", "maxs array<double>", "cnt bigint"]
+        )
+        return self.model.bins.sparkSession.read.schema(schema).parquet(
+            f"{self.path}/summary"
+        )
+
     @classmethod
     def build(
         cls,
@@ -100,35 +129,32 @@ class SFAIndex:
     ) -> "SFAIndex":
         """Index z-normalized fixed-length series for whole-matching.
 
-        Writes:
-          path/data    — (p0..p{d-1}, series_id, dft, values) partitioned
-                         by the prefix symbols (trie layout).
-          path/summary — (p0.., mins, maxs, cnt) bounding boxes.
-          path/model   — SFA bins.
-        Bulk load ≡ reference SFATrie.buildIndex: the partitionBy shuffle
+        Steps, all in the JVM:
+          1. fit   — the whole-series DFT arrays are computed once and
+                     cached; one aggregate over them gives the bins,
+                     held on the driver (fit_whole).
+          2. data  — symbols and prefix columns are one projection of
+                     the cached DFT; written once as
+                     path/data (p0..p{d-1}, series_id, dft, syms, values),
+                     partitioned by the prefix symbols (trie layout).
+          3. summary — path/summary (p0.., mins, maxs, cnt), the
+                     bounding boxes, aggregated from the written data.
+          4. model — path/model, the SFA bins and parameters.
+        Bulk load ≡ reference SFATrie.buildIndex: the partitionBy sort
         IS the bucket-sort by word prefix (SFATrie.java:171-184).
         """
-        model = SFA.fit_whole(arrays, word_length, alphabet, histogram)
-        tl = SFA.transform_whole_long(model, arrays)
-        # gather per-series symbol/coef arrays (word_length elements)
-        gathered = tl.groupBy("series_id").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("seg", "coef"))), lambda s: s["coef"]
-            ).alias("dft"),
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("seg", "symbol"))),
-                lambda s: s["symbol"],
-            ).alias("syms"),
-        )
-        pcols = [
-            F.element_at("syms", i + 1).alias(f"p{i}") for i in range(prefix_len)
-        ]
-        data = gathered.join(arrays.select("series_id", "values"), "series_id").select(
-            *pcols, "series_id", "dft", "syms", "values"
-        )
-        data.write.mode("overwrite").partitionBy(
-            *[f"p{i}" for i in range(prefix_len)]
-        ).parquet(f"{path}/data")
+        # the DFT feeds both the fit and the data write: computed once
+        coefs = spectral.dft(arrays.select("series_id", "values"), word_length).cache()
+        try:
+            model = SFA.fit_whole(coefs, word_length, alphabet, histogram)
+            index = cls(path=path, model=model, prefix_len=prefix_len)
+            pk = [f"p{i}" for i in range(prefix_len)]
+            index._with_symbols(coefs).select(
+                *[F.element_at("syms", i + 1).alias(p) for i, p in enumerate(pk)],
+                "series_id", F.col("coefs").alias("dft"), "syms", "values",
+            ).write.mode("overwrite").partitionBy(*pk).parquet(f"{path}/data")
+        finally:
+            coefs.unpersist()
 
         mins = F.array(
             *[F.min(F.element_at("dft", i + 1)) for i in range(word_length)]
@@ -136,12 +162,18 @@ class SFAIndex:
         maxs = F.array(
             *[F.max(F.element_at("dft", i + 1)) for i in range(word_length)]
         ).alias("maxs")
-        summary = data.groupBy(*[f"p{i}" for i in range(prefix_len)]).agg(
+        index.data.groupBy(*pk).agg(
             mins, maxs, F.count(F.lit(1)).alias("cnt")
-        )
-        summary.write.mode("overwrite").parquet(f"{path}/summary")
+        ).write.mode("overwrite").parquet(f"{path}/summary")
         model.save(f"{path}/model")
-        return cls(path=path, model=model, prefix_len=prefix_len)
+        return index
+
+    def _with_symbols(self, coefs: DataFrame) -> DataFrame:
+        """Adds syms, the symbols of the coefs column under the index
+        bins."""
+        return coefs.select(
+            "*", QZ.quantize_array(F.col("coefs"), self.bins).alias("syms")
+        )
 
     @staticmethod
     def _subsequence_window_rows(
@@ -261,25 +293,19 @@ class SFAIndex:
     # ------------------------------------------------------------ queries
 
     def _query_side(self, queries: DataFrame) -> DataFrame:
-        """(q_id, qdft array, qp0..qp{d-1})"""
-        tl = SFA.transform_whole_long(self.model, queries)
-        g = tl.groupBy("series_id").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("seg", "coef"))), lambda s: s["coef"]
-            ).alias("qdft"),
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("seg", "symbol"))),
-                lambda s: s["symbol"],
-            ).alias("qsyms"),
+        """(q_id, qvals, qdft array, qp0..qp{d-1})"""
+        coefs = spectral.dft(
+            queries.select("series_id", "values"), self.model.word_length
         )
-        return g.select(
+        return self._with_symbols(coefs).select(
             F.col("series_id").alias("q_id"),
-            "qdft",
+            F.col("values").alias("qvals"),
+            F.col("coefs").alias("qdft"),
             *[
-                F.element_at("qsyms", i + 1).alias(f"qp{i}")
+                F.element_at("syms", i + 1).alias(f"qp{i}")
                 for i in range(self.prefix_len)
             ],
-        ).join(queries.select(F.col("series_id").alias("q_id"), F.col("values").alias("qvals")), "q_id")
+        )
 
     def knn(
         self, queries: DataFrame, k: int, broadcast_queries: bool = True
@@ -305,9 +331,7 @@ class SFAIndex:
         the shuffle, and the summary (index metadata, KB-sized
         regardless of batch) stays the only broadcast. Same rows
         either way (plan- and equality-tested)."""
-        spark = queries.sparkSession
-        data = spark.read.parquet(f"{self.path}/data")
-        summary = spark.read.parquet(f"{self.path}/summary")
+        data, summary = self.data, self.summary
         q = self._query_side(queries).cache()
         pk = [f"p{i}" for i in range(self.prefix_len)]
 
@@ -346,12 +370,7 @@ class SFAIndex:
         # third pruning level: row-wise SFA lower bound (reference
         # SFADistance, Q9) against the candidate's word symbols — skips
         # the exact ED fold for rows whose LB already exceeds the bound
-        bins_map = {
-            r["seg"]: list(r["bins"]) for r in self.model.bins.collect()
-        }
-        row_lb = _sfa_row_lb(
-            F.col("qdft"), F.col("syms"), bins_map, self.model.word_length
-        )
+        row_lb = _sfa_row_lb(F.col("qdft"), F.col("syms"), self.bins)
         verify = (
             data.join(_side(cand_prefixes), on=pk)
             .where(row_lb <= F.col("ub"))
@@ -369,9 +388,7 @@ class SFAIndex:
     def range_search(self, queries: DataFrame, epsilon: float) -> DataFrame:
         """All (q_id, nn_id) with ED ≤ ε: prefix box filter + exact
         residual (partition pruning + residual predicate)."""
-        spark = queries.sparkSession
-        data = spark.read.parquet(f"{self.path}/data")
-        summary = spark.read.parquet(f"{self.path}/summary")
+        data, summary = self.data, self.summary
         q = self._query_side(queries)
         pk = [f"p{i}" for i in range(self.prefix_len)]
         qcols = [F.element_at("qdft", i + 1) for i in range(self.model.word_length)]

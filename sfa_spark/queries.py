@@ -461,8 +461,8 @@ def q_top_customers(spark, sf_dir):
         .agg(dec_sum("o_totalprice").alias("revenue"))
     )
     # top-k via orderBy().limit() → TakeOrderedAndProject (parallel
-    # partial top-k); ranks attach via the k×k ordered self-join so no
-    # single-partition WindowExec appears anywhere in the plan
+    # partial top-k); ranked_top_k attaches ranks with a row_number
+    # window over the k-row limit output (see operators/topk.py)
     from sfa_spark.operators.topk import ranked_top_k
 
     return ranked_top_k(
@@ -697,7 +697,8 @@ def q_tpch_shipping(spark, sf_dir):
     """TPC-H Q3 shape (shipping priority): revenue of orders placed
     before the cutoff whose lineitems shipped after it — orders dim
     broadcast into the lineitem fact scan, top-10 via
-    TakeOrderedAndProject + the k×k rank join (no global window)."""
+    TakeOrderedAndProject + a row_number window over the 10-row limit
+    (no window over the input)."""
     from sfa_spark.operators.topk import ranked_top_k
 
     cut = F.lit("1998-01-01").cast("timestamp")

@@ -1,7 +1,10 @@
-"""Spectral driver queries. The DFT/MFT oracles are CROSS-IMPLEMENTATION
-checks: Spark computes via numpy (r)FFT inside a pandas UDF, DuckDB
-recomputes the same coefficients as explicit trig sums — agreement
-validates the transform itself, not just expression mirroring.
+"""Spectral driver queries. The DFT/MFT oracles recompute the
+coefficients as explicit trig sums in DuckDB. For the MFT that is a
+CROSS-IMPLEMENTATION check: Spark runs numpy (r)FFT inside a pandas UDF,
+so agreement validates the transform itself, not just expression
+mirroring. The whole-series DFT is itself a JVM trig-sum expression
+(functions/spectral.dft); its unit tests hold it to the numpy rfft
+reference (spectral.dft_values).
 
 r4: q_sfa_words_dft (full MFT → 2-dp orderline → equi-depth → quantize
 → pack → bag pipeline) and q_dwt_coefs (Haar as closed-form block

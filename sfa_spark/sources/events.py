@@ -105,33 +105,45 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
             return df
     except Exception:  # noqa: BLE001 — non-file relations: fall through
         pass
-    # memoize the probe per (app, conf-target, canonical plan): the
-    # probe is ~0.1 s of driver-side physical planning, and
-    # multi-reference plans (e.g. the two shingle subtrees of
-    # lsh_verified_dedup) would otherwise pay it once per reference.
-    # semanticHash keys on the CANONICALIZED plan, so a repartitioned
-    # or otherwise reshaped frame over the same files never shares an
-    # entry with the bare scan. Partition counts are METADATA — this
-    # never caches results across runs.
+    # memoize the probe per (conf-target, canonical plan) within the
+    # current application: the probe is ~0.1 s of driver-side physical
+    # planning, and multi-reference plans (e.g. the two shingle
+    # subtrees of lsh_verified_dedup) would otherwise pay it once per
+    # reference. semanticHash keys on the CANONICALIZED plan, so a
+    # repartitioned or otherwise reshaped frame over the same files
+    # never shares an entry with the bare scan. Partition counts are
+    # METADATA — this never caches results across runs.
     try:
-        memo_key = (sc.applicationId, target, df.semanticHash())
+        memo_key = (target, df.semanticHash())
     except Exception:  # noqa: BLE001
         memo_key = None
-    if memo_key is not None and memo_key in _SPREAD_PROBE_CACHE:
-        n_scan = _SPREAD_PROBE_CACHE[memo_key]
-    else:
+    memo = _probe_memo(sc.applicationId)
+    n_scan = memo.get(memo_key) if memo_key is not None else None
+    if n_scan is None:
         try:
             n_scan = df.rdd.getNumPartitions()
         except Exception:  # noqa: BLE001 — planning quirk: skip the guard
             return df
         if memo_key is not None:
-            _SPREAD_PROBE_CACHE[memo_key] = n_scan
+            memo[memo_key] = n_scan
     if n_scan >= target:
         return df
     return df.repartition(target, *[F.col(k) for k in keys])
 
 
-_SPREAD_PROBE_CACHE: dict[tuple, int] = {}
+_SPREAD_PROBE_MAX = 256
+_SPREAD_PROBE_CACHE: dict[str, dict[tuple, int]] = {}
+
+
+def _probe_memo(app_id: str) -> dict[tuple, int]:
+    """The probe memo of the current application. Entries of any other
+    application are dropped, and a full memo starts over, so the
+    process-global state stays bounded."""
+    memo = _SPREAD_PROBE_CACHE.get(app_id)
+    if memo is None or len(memo) >= _SPREAD_PROBE_MAX:
+        _SPREAD_PROBE_CACHE.clear()
+        memo = _SPREAD_PROBE_CACHE[app_id] = {}
+    return memo
 
 
 def series_from_events(

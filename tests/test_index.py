@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from sfa_spark.plans.index import SFAIndex
 
+from plan_nodes import PYTHON_EXECS, CapturedPlans, class_name, plan_nodes
+
 
 def _znorm_rows(mat):
     m = mat - mat.mean(axis=1, keepdims=True)
@@ -27,22 +29,65 @@ def corpus(spark):
     return df, Z
 
 
+def _assert_knn_is_bruteforce(idx, df, Z, n_queries=5, k=3):
+    res = idx.knn(df.where(F.col("series_id") < n_queries), k=k).collect()
+    D = np.sqrt(((Z[:, None, :] - Z[None, :, :]) ** 2).sum(-1))
+    got = {(r["q_id"], r["rk"]): (r["nn_id"], r["dist"]) for r in res}
+    for qi in range(n_queries):
+        order = np.lexsort((np.arange(len(Z)), D[qi]))
+        for rk in range(1, k + 1):
+            nn, dist = got[(qi, rk)]
+            assert dist == pytest.approx(D[qi, order[rk - 1]], abs=1e-9)
+            assert nn == order[rk - 1]
+
+
+def _assert_range_is_bruteforce(idx, df, Z, n_queries=4):
+    eps = float(np.quantile(np.sqrt(((Z[0] - Z[1:]) ** 2).sum(-1)), 0.1))
+    res = idx.range_search(df.where(F.col("series_id") < n_queries), epsilon=eps)
+    got = {(r["q_id"], r["nn_id"]) for r in res.collect()}
+    D = np.sqrt(((Z[:, None, :] - Z[None, :, :]) ** 2).sum(-1))
+    expected = {
+        (qi, ci) for qi in range(n_queries) for ci in range(len(Z)) if D[qi, ci] <= eps
+    }
+    assert got == expected
+
+
 def test_knn_equals_bruteforce(spark, corpus, tmp_path):
     df, Z = corpus
     idx = SFAIndex.build(
         df, str(tmp_path / "idx"), word_length=8, alphabet=8, prefix_len=2
     )
-    queries = df.where(F.col("series_id") < 5)
-    res = idx.knn(queries, k=3).collect()
-    # brute force in numpy
-    D = np.sqrt(((Z[:, None, :] - Z[None, :, :]) ** 2).sum(-1))
-    got = {(r["q_id"], r["rk"]): (r["nn_id"], r["dist"]) for r in res}
-    for qi in range(5):
-        order = np.lexsort((np.arange(len(Z)), D[qi]))
-        for rk in range(1, 4):
-            nn, dist = got[(qi, rk)]
-            assert dist == pytest.approx(D[qi, order[rk - 1]], abs=1e-9)
-            assert nn == order[rk - 1]
+    _assert_knn_is_bruteforce(idx, df, Z)
+
+
+def test_equi_depth_index_equals_bruteforce(spark, corpus, tmp_path):
+    """Equi-depth bins spread the corpus over the prefix partitions
+    differently from equi-width; answers must stay exact."""
+    df, Z = corpus
+    idx = SFAIndex.build(
+        df, str(tmp_path / "idx_ed"), word_length=8, alphabet=8, prefix_len=2,
+        histogram="equi_depth",
+    )
+    assert all(len(bs) == 7 and bs == sorted(bs) for bs in idx.bins)
+    _assert_knn_is_bruteforce(idx, df, Z)
+    _assert_range_is_bruteforce(idx, df, Z)
+
+
+def test_index_path_runs_no_python(spark, corpus, tmp_path):
+    """Build, k-NN and ε-range run no Python worker: no query they
+    execute plans a Python-UDF operator."""
+    df, Z = corpus
+    with CapturedPlans(spark) as cap:
+        idx = SFAIndex.build(
+            df, str(tmp_path / "idx_jvm"), word_length=8, alphabet=8, prefix_len=2
+        )
+        idx.knn(df.where("series_id < 3"), k=2).collect()
+        idx.range_search(df.where("series_id < 3"), epsilon=5.0).collect()
+    # fit, data write, summary write, two model writes, knn, range
+    assert len(cap.plans) >= 7, len(cap.plans)
+    names = {class_name(n) for p in cap.plans for n in plan_nodes(p)}
+    assert "DataWritingCommandExec" in names, names
+    assert not names & set(PYTHON_EXECS), names
 
 
 def test_knn_self_is_rank1(spark, corpus, tmp_path):
@@ -56,12 +101,7 @@ def test_knn_self_is_rank1(spark, corpus, tmp_path):
 def test_range_search_equals_bruteforce(spark, corpus, tmp_path):
     df, Z = corpus
     idx = SFAIndex.build(df, str(tmp_path / "idx3"), word_length=8, alphabet=8, prefix_len=2)
-    eps = float(np.quantile(np.sqrt(((Z[0] - Z[1:]) ** 2).sum(-1)), 0.1))
-    res = idx.range_search(df.where("series_id < 4"), epsilon=eps).collect()
-    got = {(r["q_id"], r["nn_id"]) for r in res}
-    D = np.sqrt(((Z[:, None, :] - Z[None, :, :]) ** 2).sum(-1))
-    expected = {(qi, ci) for qi in range(4) for ci in range(len(Z)) if D[qi, ci] <= eps}
-    assert got == expected
+    _assert_range_is_bruteforce(idx, df, Z)
 
 
 def test_summary_prunes(spark, corpus, tmp_path):
@@ -143,23 +183,27 @@ def test_sfa_lb_distance_property(spark, corpus, tmp_path):
     true Euclidean distance for every (query, candidate) pair."""
     import numpy as np
 
+    from sfa_spark.functions import spectral
     from sfa_spark.functions.distances import sfa_lb_distance
+    from sfa_spark.operators import quantize as QZ
     from sfa_spark.operators import sfa as SFA
 
     df, Z = corpus
     sub = df.where("series_id < 30")
-    model = SFA.fit_whole(sub, word_length=8, alphabet=8)
-    tl = SFA.transform_whole_long(model, sub).collect()
-    bins = {r["seg"]: list(r["bins"]) for r in model.bins.collect()}
-    dfts, syms = {}, {}
-    for r in tl:
-        dfts.setdefault(r["series_id"], {})[r["seg"]] = r["coef"]
-        syms.setdefault(r["series_id"], {})[r["seg"]] = r["symbol"]
+    coefs = spectral.dft(sub, 8)
+    model = SFA.fit_whole(coefs, word_length=8, alphabet=8)
+    bins = [list(r["bins"]) for r in sorted(model.bins.collect(), key=lambda r: r["seg"])]
+    rows = (
+        coefs.select("series_id", "coefs", QZ.quantize_array(F.col("coefs"), bins).alias("syms"))
+        .collect()
+    )
+    dfts = {r["series_id"]: list(r["coefs"]) for r in rows}
+    syms = {r["series_id"]: list(r["syms"]) for r in rows}
     ids = sorted(dfts)
+    assert len(ids) == 30
     for qi in ids[:10]:
-        q = [dfts[qi][i] for i in range(8)]
         for ci in ids:
-            lb = sfa_lb_distance(q, [syms[ci][i] for i in range(8)], bins)
+            lb = sfa_lb_distance(dfts[qi], syms[ci], bins)
             ed = float(np.sqrt(((Z[qi] - Z[ci]) ** 2).sum()))
             assert lb <= ed + 1e-6, (qi, ci, lb, ed)
 

@@ -369,3 +369,23 @@ def test_spread_scan_identity_when_parallel_or_disabled(spark, sf_dir, monkeypat
 
     monkeypatch.setenv("SPARK_GRAFT_SPREAD_SCAN", "off")
     assert spread_scan(docs, "doc_id") is docs
+
+
+def test_spread_probe_memo_keeps_current_app_and_caps(spark, sf_dir, monkeypatch):
+    """The probe memo is process-global, so it must stay bounded: it
+    holds only the current application's entries, and a full memo
+    starts over."""
+    from sfa_spark.sources import events as E
+
+    E.spread_scan(E.load_table(spark, sf_dir, "documents"), "doc_id")
+    assert list(E._SPREAD_PROBE_CACHE) == [spark.sparkContext.applicationId]
+
+    monkeypatch.setattr(E, "_SPREAD_PROBE_CACHE", {"old-app": {(8, 1): 1}})
+    monkeypatch.setattr(E, "_SPREAD_PROBE_MAX", 3)
+    memo = E._probe_memo("app-1")
+    assert list(E._SPREAD_PROBE_CACHE) == ["app-1"]
+    memo[(8, 0)] = memo[(8, 1)] = 0
+    assert E._probe_memo("app-1") is memo  # below the cap: kept
+    memo[(8, 2)] = 0
+    fresh = E._probe_memo("app-1")
+    assert fresh == {} and E._SPREAD_PROBE_CACHE == {"app-1": fresh}

@@ -93,12 +93,56 @@ def test_dft_distance_lower_bounds_euclidean():
 
 
 def test_dft_spark_matches_numpy(spark):
+    """The JVM trig-sum DFT equals the numpy reference: power-of-2 and
+    other lengths, series shorter than l (k > N/2 emits 0), an odd l,
+    and no padding."""
     rng = np.random.default_rng(8)
-    data = [(i, rng.normal(0, 1, 32).tolist()) for i in range(5)]
+    lengths = [32, 32, 1, 2, 3, 5, 7, 12, 33, 64, 100]
+    data = [(i, rng.normal(0, 1, n).tolist()) for i, n in enumerate(lengths)]
     df = spark.createDataFrame(data, "series_id long, values array<double>")
-    got = {r["series_id"]: np.array(r["coefs"]) for r in spectral.dft(df, 8).collect()}
-    for sid, vals in data:
-        assert np.allclose(got[sid], spectral.dft_values(np.array(vals), 8), atol=1e-12)
+    for l, pad in ((8, True), (16, True), (7, True), (8, False), (16, False)):
+        out = spectral.dft(df, l, pad_pow2=pad)
+        assert out.columns == ["series_id", "values", "coefs"]
+        got = {r["series_id"]: np.array(r["coefs"]) for r in out.collect()}
+        for sid, vals in data:
+            want = spectral.dft_values(np.array(vals), l, pad_pow2=pad)
+            assert np.allclose(got[sid], want, rtol=0, atol=1e-12), (l, pad, sid)
+
+
+def test_dft_long_form_plan_keeps_coefficients_out_of_filters(spark, tmp_path):
+    """Two Catalyst traps of an array-expression DFT, pinned on the
+    executed plan of coefs_to_long(dft(...)) over an uncached scan:
+    no Filter evaluates a higher-order function (an inferred
+    size(coefs) > 0 filter would inline the DFT into the scan), and no
+    lambda recomputes the padded size per element."""
+    from plan_nodes import (
+        class_name,
+        executed_nodes,
+        expressions,
+        is_instance,
+        node_expressions,
+    )
+
+    rng = np.random.default_rng(9)
+    path = str(tmp_path / "arrays")
+    spark.createDataFrame(
+        [(i, rng.normal(0, 1, 20).tolist()) for i in range(6)],
+        "series_id long, values array<double>",
+    ).write.parquet(path)
+    out = spectral.coefs_to_long(spectral.dft(spark.read.parquet(path), 8))
+    assert out.count() == 6 * 8
+    hof = "org.apache.spark.sql.catalyst.expressions.HigherOrderFunction"
+    nodes = executed_nodes(out)
+    assert any(class_name(n) == "FileSourceScanExec" for n in nodes)
+    for node in nodes:
+        exprs = node_expressions(node)
+        if class_name(node) == "FilterExec":
+            assert not any(is_instance(spark, e, hof) for e in exprs), node.toString()
+        for e in exprs:
+            if is_instance(spark, e, hof):
+                fns = e.functions()
+                inner = [x for i in range(fns.size()) for x in expressions(fns.apply(i))]
+                assert not any(class_name(x) == "ShiftLeft" for x in inner), e.toString()
 
 
 @pytest.fixture(scope="module")

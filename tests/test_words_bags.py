@@ -67,6 +67,38 @@ def test_quantize_with_bins_matches_searchsorted(spark):
     sym = quantize.quantize_with_bins(df, bins).collect()
     for r in sym:
         assert r["symbol"] == int(np.searchsorted([-1.0, 0.0, 1.0], r["coef"], side="right"))
+    # the array form: coefficient i quantized under bins[i]
+    arr = spark.createDataFrame([(vals.tolist(),)], "coefs array<double>")
+    got = arr.select(
+        quantize.quantize_array(F.col("coefs"), [[-1.0, 0.0, 1.0]] * len(vals)).alias("s")
+    ).first()["s"]
+    assert got == [r["symbol"] for r in sorted(sym, key=lambda r: r["win"])]
+
+
+def test_equi_depth_bounds_matches_reference_scan(spark):
+    """The JVM fold over an array orderline gives the boundaries of the
+    grouped reference scan, including its duplicate suppression (2-dp
+    rounding makes many ties) and a constant coefficient."""
+    import numpy as np
+
+    rng = np.random.default_rng(52)
+    rows = [(0, i, 0, float(v)) for i, v in enumerate(np.round(rng.normal(0, 0.05, 300), 2))]
+    rows += [(0, i, 1, float(v)) for i, v in enumerate(np.round(rng.exponential(1, 301), 2))]
+    rows += [(0, i, 2, 0.25) for i in range(40)]
+    rows += [(0, i, 3, float(v)) for i, v in enumerate([3.0, 1.0, 2.0])]
+    df = spark.createDataFrame(rows, "series_id long, win long, seg int, coef double")
+    for a in (4, 8):
+        ref = {
+            r["seg"]: list(r["bins"])
+            for r in quantize.fit_equi_depth_bins(df, a).collect()
+        }
+        got = {
+            r["seg"]: list(r["bins"])
+            for r in df.groupBy("seg")
+            .agg(quantize.equi_depth_bounds(F.array_sort(F.collect_list("coef")), a).alias("bins"))
+            .collect()
+        }
+        assert got == ref, a
 
 
 def test_numerosity_reduction(spark):
