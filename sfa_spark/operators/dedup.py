@@ -62,7 +62,7 @@ def jaccard_pairs(
     own hot-feature pruning (χ²/WORD_LIMIT cap,
     transformation/WEASEL.java:287-324).
 
-    NOT persisted (r9 negative result): the plan consumes the shingle
+    NOT persisted (measured negative result): the plan consumes the shingle
     table four times (df cap/guard aggregate, per-doc sizes, both
     sides of the inverted-index self-join) and a persist() looks like
     the guide §5 move — measured, it is a 2× LOSS (sf0.1 interleaved
@@ -248,7 +248,7 @@ def minhash_signatures(docs: DataFrame, n_seeds: int = 8, k: int = 3) -> DataFra
     engine-specific hash functions. One aggregation over the exploded
     (shingle × seed) space; seeds are a tiny constant factor.
 
-    r8 negative result, kept for the record: folding all seeds into ONE
+    Negative result, kept for the record: folding all seeds into ONE
     groupBy(doc_id) of n_seeds min(md5(...)) aggregates (saving the 8×
     row amplification and letting the band grouping reuse the doc_id
     partitioning exchange-free) measured ~1.5× SLOWER on the signature
@@ -378,56 +378,24 @@ def lsh_candidate_pairs(
     )
 
 
-def _hex32_to_int(col):
-    """First 8 hex chars of an md5 → bigint (portable via conv)."""
-    return F.conv(F.substring(col, 1, 8), 16, 10).cast("bigint")
-
-
-def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """32-bit SimHash over word tokens: per bit, majority vote of token
-    hashes (+1/−1), bit set iff the vote is positive.
-
-    Pure SQL, NO per-bit row explosion: the signed vote for bit i is
-    2*count(tokens with bit i set) − n_tokens, so all `bits` votes
-    come from one groupBy(doc_id) carrying `bits` conditional sums —
-    token rows stay at corpus token count instead of ×bits (the r8
-    rewrite; the explode form made the signature stage dominate the
-    near-dup query at sf1). Output: (doc_id, simhash bigint).
-
-    spread_scan (r9): the per-token md5 runs in the narrow chain on
-    the scan — serial on a single-row-group file; the guard
-    parallelizes it and the groupBy(doc_id) reuses the partitioning
-    (no second exchange). Identity at cluster scale."""
-    from sfa_spark.operators.text import with_tokens
-    from sfa_spark.sources.events import spread_scan
-
-    tok = (
-        with_tokens(spread_scan(docs, "doc_id"))
-        .select("doc_id", F.explode("toks").alias("tok"))
-        .select("doc_id", _hex32_to_int(F.md5("tok")).alias("h"))
-    )
-    counts = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.expr(f"(h >> {i}) & 1")).alias(f"c{i}")
-            for i in range(bits)
-        ],
-    )
-    packed = " + ".join(
-        f"if(2 * c{i} > n, shiftleft(cast(1 as bigint), {i}),"
-        " cast(0 as bigint))"
-        for i in range(bits)
-    )
-    return counts.select(
-        "doc_id", F.expr(packed).cast("bigint").alias("simhash")
+    hashes (+1/−1), bit set iff the vote is positive. The 32-bit
+    signature of `simhash_bits`, packed back to a number.
+    Output: (doc_id, simhash bigint)."""
+    return simhash_bits(docs, 32).select(
+        "doc_id", F.conv("sig", 2, 10).cast("bigint").alias("simhash")
     )
 
 
 def simhash_bits(docs: DataFrame, bits: int = 64) -> DataFrame:
-    """Wide SimHash as an MSB-first bit STRING — the signature the
-    banded near-dup blocker (multimodal.phash_neardup_pairs) consumes.
+    """SimHash over word tokens as an MSB-first bit STRING: per bit,
+    majority vote of token hashes (+1/−1), bit set iff the vote is
+    positive. The 64-bit default is the signature the banded near-dup
+    blocker (multimodal.phash_neardup_pairs) consumes; `simhash` packs
+    the 32-bit one into a bigint.
 
-    Why a separate entry point from `simhash`: banded Hamming blocking
+    Why wider than 32 bits: banded Hamming blocking
     only keeps buckets O(1) when the band key space outgrows the
     corpus — with b-bit signatures and d < n_bands bands the band is
     b/n_bands bits, so you need b/n_bands ≳ log2(n_docs). 32 bits /
@@ -441,16 +409,24 @@ def simhash_bits(docs: DataFrame, bits: int = 64) -> DataFrame:
 
     Token hash: consecutive 8-hex-char windows of md5(tok), one 32-bit
     word per 32 signature bits — bit i votes with word i//32, bit
-    i%32. Word 0 is md5 chars 1-8, so the LOW 32 bits of the 64-bit
-    signature equal `simhash(docs, 32)` exactly (property-tested).
+    i%32. Word 0 is md5 chars 1-8, so the LOW 32 bits of a wider
+    signature equal the 32-bit `simhash` (property-tested).
     All arithmetic stays on non-negative <2^32 bigints — no sign-bit
     portability trap between Spark's and DuckDB's >> on negatives.
 
     Output: (doc_id, sig string of length `bits`, MSB first — same
     orientation as lpad(bin(x), bits, '0')).
 
-    spread_scan (r9): same rationale as `simhash` — the per-token md5
-    chain otherwise runs serially on an under-split scan.
+    Pure SQL, NO per-bit row explosion: the signed vote for bit i is
+    2*count(tokens with bit i set) − n_tokens, so all `bits` votes come
+    from one groupBy(doc_id) carrying `bits` conditional sums — token
+    rows stay at corpus token count instead of ×bits (the explode form
+    made the signature stage dominate the near-dup query at sf1).
+
+    spread_scan: the per-token md5 chain otherwise runs serially on a
+    single-row-group file; the guard parallelizes it and the
+    groupBy(doc_id) reuses the partitioning (no second exchange).
+    Identity at cluster scale.
     """
     from sfa_spark.operators.text import with_tokens
     from sfa_spark.sources.events import spread_scan
@@ -473,8 +449,6 @@ def simhash_bits(docs: DataFrame, bits: int = 64) -> DataFrame:
         .select("doc_id", F.md5("tok").alias("hx"))
         .select("doc_id", words.alias("hw"))
     )
-    # Same no-explosion layout as `simhash`: bit i's signed vote is
-    # 2*count(set) − n, so one groupBy carries all `bits` sums.
     counts = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n"),
         *[

@@ -1,24 +1,25 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
-  * brute-force cosine top-k — the correctness baseline. The dot
-    product is a JVM-side zip_with/aggregate fold (deterministic
-    left-to-right summation — reproducible across runs AND mirrorable
-    in an oracle), no Python.
-  * sign-bucket IVF — the scale path: a cheap coarse quantizer (sign
-    bits of the first b dims) buckets vectors; queries probe only their
-    bucket. Same two-phase signature→partition→verify shape as the SFA
-    trie index and MinHash LSH. Recall/probe-count trade documented at
-    the call site; exact re-rank inside the bucket.
+  * brute-force cosine top-k (cosine_topk, hard_negatives) — the
+    correctness baseline. The query side is broadcast, the corpus
+    scanned once, and each pair's dot product is a JVM
+    zip_with/aggregate fold: deterministic left-to-right summation,
+    reproducible across runs and mirrorable in an oracle, no Python.
+  * sign-bucket IVF — a cheap coarse quantizer (sign bits of the first
+    b dims) buckets vectors; queries probe only their bucket. Same
+    two-phase signature→partition→verify shape as the SFA trie index
+    and MinHash LSH. Exact re-rank inside the bucket.
+  * k-means IVF / PQ — ivf_assign inlines the driver-sized centroid
+    table as literals and assigns each vector row-locally (no join,
+    no shuffle); PQ codebooks inline the same way.
 
 At 100 TB: broadcast the (small) query set, scan the corpus once,
-per-query top-k via aggregation — no shuffle of the corpus. The bucket
-variant prunes the scan with partition pruning when the corpus is
+per-query top-k via a window — no shuffle of the corpus. The bucket
+variants prune the scan with partition pruning when the corpus is
 written partitionBy(bucket).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -52,73 +53,20 @@ def _brute_cosine_rank(
     c_carry: list[str] = (),
     excl_pair: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """Shared exact-scan core: broadcast the (small) query side, scan
-    the corpus once, score cosine, rank per query. ``q_carry``/
-    ``c_carry`` pass extra columns through; ``excl_pair=(q_col,
-    c_col)`` prunes pairs whose carried values are EQUAL before
-    ranking (hard_negatives' same-label exclusion).
+    """Shared exact-scan core of cosine_topk and hard_negatives:
+    broadcast the (small) query side, scan the corpus once, score every
+    (query, corpus) pair as a JVM zip_with/aggregate fold, and keep the
+    top k per query by (cosine desc, nn_id asc). ``q_carry``/``c_carry``
+    pass extra columns through; ``excl_pair=(q_col, c_col)`` prunes
+    pairs whose carried values are EQUAL before scoring (hard_negatives'
+    same-label exclusion). Self-matches are skipped.
 
-    Large-corpus path (r9): one GEMM per Arrow batch (guide §4.2 —
-    hand whole batches to BLAS instead of folding per pair). The JVM
-    zip_with/aggregate fold evaluates an interpreted lambda per
-    vector element per PAIR — |C|·|Q|·d evaluations, linear in the
-    corpus at ~10 s per million 64-dim rows on this box, where the
-    same scores are one BLAS matmul. Each task reshapes its batch's
-    flat float buffer, scores all queries at once, and emits only its
-    per-batch top-k candidates per query (top-k is distributive: a
-    pair outside a batch's top-k cannot be in the global top-k, which
-    the final window still resolves exactly, including the (cosine
-    desc, nn_id asc) tie order and Spark's NaN-largest DESC
-    placement). Scores differ from the fold only by float64
-    reassociation, absorbed by the declared 4-dp rounding and the
-    oracle's +1e-9 nudge — verified green at sf0.001/0.01/0.1.
-
-    The switch is SIZE-ADAPTIVE (measured crossover, interleaved
-    noop A/Bs on this box): the GEMM pays ~0.4-0.5 s fixed — a
-    construction-time collect of the query side plus Python worker
-    spin-up — so at 20k corpus rows (sf1, 5.7 MB) the fold wins
-    (1.10 vs 1.50 s) while at 500k rows (42 MB estimated) the GEMM
-    wins (3.6 vs 5.1 s) and the gap grows linearly with |C|. `auto`
-    picks GEMM when the optimizer's corpus size estimate exceeds
-    SPARK_GRAFT_GEMM_MIN_BYTES (default 16 MB ≈ the ~200k-row
-    crossover); SPARK_GRAFT_COSINE_GEMM=on|off forces either arm;
-    streaming frames always fold.
+    The fold sums left to right, so scores are reproducible across runs
+    and mirrorable in an oracle. Building the frame runs no Spark job;
+    the plan starts no Python worker and works on streaming frames too.
+    The fold costs |C|·|Q|·d interpreted lambda evaluations, linear in
+    the corpus.
     """
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_COSINE_GEMM", "auto")
-    use_gemm = mode == "on"
-    if mode == "auto" and not (queries.isStreaming or corpus.isStreaming):
-        try:
-            est = int(
-                str(
-                    corpus._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-            thresh = int(
-                os.environ.get("SPARK_GRAFT_GEMM_MIN_BYTES", str(16 << 20))
-            )
-            # estimates near Long.MaxValue mean "unknown" (Spark's
-            # defaultSizeInBytes for un-stat'd relations) — fold then
-            use_gemm = thresh <= est < (1 << 62)
-        except Exception:  # noqa: BLE001 — stats unavailable: fold
-            use_gemm = False
-    if not use_gemm or queries.isStreaming or corpus.isStreaming:
-        return _brute_cosine_rank_fold(
-            queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
-        )
-    return _brute_cosine_rank_gemm(
-        queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
-    )
-
-
-def _brute_cosine_rank_fold(
-    queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
-) -> DataFrame:
-    """The pre-r9 JVM fold form — streaming-safe reference path."""
     from sfa_spark.sources.events import spread_scan
 
     q = with_norm(queries, vec_col).select(
@@ -127,9 +75,9 @@ def _brute_cosine_rank_fold(
         F.col("norm").alias("qn"),
         *q_carry,
     )
-    # spread_scan (r9): the per-pair dot-product folds run in the
-    # corpus scan's narrow chain — serial on a single-row-group file;
-    # identity at cluster scale (guide §2.5).
+    # the per-pair dot-product folds run in the corpus scan's narrow
+    # chain — serial on a single-row-group file; identity at cluster
+    # scale.
     corpus = spread_scan(corpus, id_col)
     c = with_norm(corpus, vec_col).select(
         F.col(id_col).alias(nn_id),
@@ -155,116 +103,6 @@ def _brute_cosine_rank_fold(
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("int"))
         .where(F.col("rk") <= k)
-    )
-
-
-def _brute_cosine_rank_gemm(
-    queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
-) -> DataFrame:
-    """Arrow-batched GEMM scorer. The query side is collected (it is
-    broadcast-small by the operator's contract — same construction-time
-    collect as kmeans_fit's codebook); the corpus crosses the Python
-    boundary once as Arrow batches carrying only (id, vec, c_carry)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DoubleType, StructField, StructType
-    from sfa_spark.sources.events import spread_scan
-
-    q_excl = excl_pair[0] if excl_pair else None
-    c_excl = excl_pair[1] if excl_pair else None
-
-    q_sel = queries.select(
-        F.col(id_col).alias("q_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-        *q_carry,
-    )
-    q_rows = sorted(q_sel.collect(), key=lambda r: r["q_id"])
-    Q = np.array([list(r["qv"]) for r in q_rows], dtype=np.float64)
-    qn = np.sqrt((Q * Q).sum(axis=1)) if Q.size else np.zeros(len(q_rows))
-    q_ids = [r["q_id"] for r in q_rows]
-    q_carry_vals = {c: [r[c] for r in q_rows] for c in q_carry}
-    d = Q.shape[1] if Q.ndim == 2 and Q.size else 0
-    kk = int(k)
-
-    c_sel = spread_scan(corpus, id_col).select(
-        F.col(id_col).alias(nn_id),
-        _as_double(F.col(vec_col)).alias("cv"),
-        *c_carry,
-    )
-    q_fields = {f.name: f for f in q_sel.schema.fields}
-    c_fields = {f.name: f for f in c_sel.schema.fields}
-    out_schema = StructType(
-        [q_fields["q_id"]]
-        + [q_fields[c] for c in q_carry]
-        + [c_fields[nn_id]]
-        + [c_fields[c] for c in c_carry]
-        + [StructField("cosine", DoubleType())]
-    )
-    pa_schema = to_arrow_schema(out_schema)
-
-    def _score(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0 or not q_ids:
-                continue
-            vec = b.column("cv")
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            assert flat.size == n * d, (
-                f"ragged {vec_col}: {flat.size} values for {n} rows of dim {d}"
-            )
-            X = flat.reshape(n, d)
-            cn = np.sqrt((X * X).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = (X @ Q.T) / (cn[:, None] * qn[None, :])
-            c_ids = b.column(nn_id).to_numpy(zero_copy_only=False)
-            c_excl_v = (
-                b.column(c_excl).to_numpy(zero_copy_only=False) if c_excl else None
-            )
-            sel_i, sel_j = [], []
-            for j in range(len(q_ids)):
-                valid = c_ids != q_ids[j]
-                if c_excl_v is not None:
-                    valid &= c_excl_v != q_carry_vals[q_excl][j]
-                idx = np.flatnonzero(valid)
-                if idx.size == 0:
-                    continue
-                s = S[idx, j]
-                # Spark DESC order: NaN first, then -cosine, then nn_id
-                nan_rank = np.where(np.isnan(s), 0, 1)
-                order = np.lexsort((c_ids[idx], np.negative(s), nan_rank))[:kk]
-                pick = idx[order]
-                sel_i.append(pick)
-                sel_j.append(np.full(pick.size, j, dtype=np.int64))
-            if not sel_i:
-                continue
-            ii = np.concatenate(sel_i)
-            jj = np.concatenate(sel_j)
-            take = pa.array(ii)
-            arrays = [
-                pa.array([q_ids[j] for j in jj], type=pa_schema.field("q_id").type)
-            ]
-            for c in q_carry:
-                arrays.append(
-                    pa.array(
-                        [q_carry_vals[c][j] for j in jj],
-                        type=pa_schema.field(c).type,
-                    )
-                )
-            arrays.append(b.column(nn_id).take(take))
-            for c in c_carry:
-                arrays.append(b.column(c).take(take))
-            arrays.append(pa.array(S[ii, jj], type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
-
-    scored = c_sel.mapInArrow(_score, out_schema)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col(nn_id).asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .where(F.col("rk") <= kk)
     )
 
 
@@ -597,53 +435,6 @@ def _sqdist_expr(a, b):
     )
 
 
-# max total inlined doubles (C × dim) for ivf_assign's literal
-# array-of-structs form; beyond this Catalyst analysis/codegen cost
-# dominates and the pandas-UDF path wins
-LITERAL_BUDGET = 32768
-
-
-def _ivf_assign_pandas(df, rows, v, n_probes):
-    """Row-local IVF assignment via Arrow-batched pandas UDF: vectorized
-    ||x−c||² over a closure-captured (C, dim) numpy matrix; ties break
-    to the smallest centroid_id (lexsort), matching the literal path."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    cents = np.array([r["cvec"] for r in rows], dtype=np.float64)
-    cids = np.array([int(r["centroid_id"]) for r in rows], dtype=np.int64)
-    c_sq = (cents * cents).sum(axis=1)
-
-    @pandas_udf("array<int>")
-    def _probe(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        d2 = (x * x).sum(axis=1)[:, None] - 2.0 * x @ cents.T + c_sq[None, :]
-        if n_probes == 1:
-            best = cids[np.argmin(d2, axis=1)]
-            return pd.Series([[int(b)] for b in best])
-        out = []
-        for i in range(len(x)):
-            order = np.lexsort((cids, d2[i]))[:n_probes]
-            out.append([int(c) for c in cids[order]])
-        return pd.Series(out)
-
-    probed = df.withColumn("_probes", _probe(v))
-    if n_probes == 1:
-        return (
-            probed.withColumn("centroid_id", F.col("_probes")[0])
-            .withColumn("crk", F.lit(1).cast("int"))
-            .drop("_probes")
-        )
-    return (
-        probed.select("*", F.posexplode("_probes"))
-        .withColumn("centroid_id", F.col("col"))
-        .withColumn("crk", (F.col("pos") + 1).cast("int"))
-        .drop("_probes", "pos", "col")
-    )
-
-
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
@@ -657,26 +448,18 @@ def ivf_assign(
     (crk 1 is the home centroid — the IVF list assignment).
 
     ROW-LOCAL: the centroid table is driver-sized by construction
-    (kmeans_fit returns C rows), so it inlines as literal arrays — the
-    same trick pq_encode uses for its codebook — and the per-row argmin
-    is a codegen'd `array_min` over `(dist, centroid_id)` structs. No
-    join, no shuffle, one corpus scan: at 10⁹ vectors the former
-    crossJoin+window form exchanged C× the corpus for what this computes
-    in place. Ties break to the smallest centroid_id (struct ordering =
-    (dist asc, centroid_id asc)), identical to the previous window
-    `row_number` semantics, so results are bit-for-bit unchanged.
-
-    Above LITERAL_BUDGET total C×dim literals the inlined expression
-    would stress Catalyst (Janino 64KB method fallback, slow analysis),
-    so large centroid sets switch to an equally row-local Arrow-batched
-    pandas UDF over a closure-captured numpy matrix — same output, same
-    tie-break, still zero joins/exchanges.
+    (kmeans_fit returns C rows), so it is collected and inlined as
+    literal arrays — the same trick pq_encode uses for its codebook —
+    and the per-row argmin is a codegen'd `array_min` over
+    `(dist, centroid_id)` structs; n_probes > 1 takes the first
+    n_probes of `array_sort` over the same structs. No join, no
+    shuffle, no Python worker, one corpus scan. Ties break to the
+    smallest centroid_id (struct ordering = (dist asc, centroid_id
+    asc)). The inlined expression grows with C×dim; the registered
+    queries use C = 8 (queries_text.KMEANS_C).
     """
     rows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
     v = _as_double(F.col(vec_col))
-    dim = len(rows[0]["cvec"]) if rows else 0
-    if len(rows) * dim > LITERAL_BUDGET:
-        return _ivf_assign_pandas(df, rows, v, n_probes)
     darr = F.array(
         *[
             F.struct(

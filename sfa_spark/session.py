@@ -15,17 +15,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """16g, or 60% of physical memory when that is smaller: local[N]
+    runs driver and executors in one JVM, and a heap allowed to grow
+    past the machine's memory gets the JVM OOM-killed by the kernel
+    instead of collected by the GC."""
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(16 << 10, int(phys_mb * 0.6))}m"
+
+
 def get_spark(
     app_name: str = "sfa-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -34,25 +41,17 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Join strategy (guide §3.1/§9, r8): let the planner pick a
+        # Join strategy: let the planner pick a
         # shuffled-hash join when one side fits a per-partition hash
         # map — SMJ's sort pass is pure overhead for the keyed MERGE/
         # diff shapes (measured sf0.1: q_merge_changes 0.65 → 0.50 s,
         # SMJ→SHJ in-plan). AQE additionally rewrites SMJ→SHJ at
         # runtime when every post-shuffle partition is under the local
-        # map threshold. Both parameterized: a cluster with small
-        # executor memory can restore sort-merge with
-        # SPARK_GRAFT_PREFER_SMJ=true / SPARK_GRAFT_SHJ_LOCALMAP=0
-        # (sort-merge spills gracefully; hash maps must fit — §3.1's
-        # documented trade).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
-        )
+        # map threshold. The trade: sort-merge spills gracefully, hash
+        # maps must fit; a cluster with small executor memory can
+        # restore sort-merge through ``extra_conf``.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # driver testdata parquet carries TIMESTAMP(NANOS) — read as
@@ -61,9 +60,13 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         # local[N] runs driver+executors in ONE JVM — size the heap for
-        # 32 concurrent tasks plus cached grid tables. On a real
-        # cluster executor memory is configured separately.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # 32 concurrent tasks plus cached grid tables, within the
+        # machine's memory. On a real cluster executor memory is
+        # configured separately.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         # the status store retains full plan-description strings per SQL
         # execution EVEN with the UI off (default 1000 executions); the

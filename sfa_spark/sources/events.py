@@ -11,8 +11,6 @@ sort so results are stable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -72,8 +70,7 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     shingling, per-token hashing, per-pair folds — runs serially on
     one core. Measured at sf0.1 (one-file tables, 32 cores): the
     entire MinHash signature stage ran in the lone scan task, and
-    8-core ≈ 32-core walltime for the whole dedup family (VERDICT r8
-    item 3).
+    8-core ≈ 32-core walltime for the whole dedup family.
 
     When the scan yields fewer partitions than defaultParallelism,
     hash-repartition by ``keys`` (deterministic under retry, unlike a
@@ -82,17 +79,16 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     compute-dense input back onto one core (its 1 MB/partition floor
     measures bytes, not work). Downstream groupBy/window keyed on a
     superset of ``keys`` reuses the partitioning, so the chain gains
-    NO second exchange — the one that previously ran AFTER the heavy
-    compute moves in front of it and carries the raw rows instead.
+    NO second exchange: the exchange that aggregation needs anyway runs
+    in front of the heavy compute and carries the raw rows.
 
-    Scale behaviour: any real multi-file table yields >= cores scan
-    partitions and this is the identity — no extra pass of the corpus
-    at 100 TB, where the input split count, not this guard, provides
-    the parallelism. Streaming inputs pass through untouched.
-    SPARK_GRAFT_SPREAD_SCAN=off disables the guard outright.
+    The identity when the input already has enough partitions: at
+    least defaultParallelism input files, or (probed once per plan and
+    memoized) at least that many scan partitions. Any real multi-file
+    table is that case — no extra pass of the corpus at 100 TB, where
+    the input split count, not this guard, provides the parallelism.
+    Streaming inputs pass through untouched.
     """
-    if os.environ.get("SPARK_GRAFT_SPREAD_SCAN", "auto") == "off":
-        return df
     if df.isStreaming:
         return df
     sc = df.sparkSession.sparkContext
@@ -196,7 +192,7 @@ def series_arrays_from_events(
     Same memory caveat as series_to_arrays: one series must fit in
     executor memory (classification corpora; not indexing-scale).
 
-    spread_scan (r9): the map-side partial collect_list otherwise
+    spread_scan: the map-side partial collect_list otherwise
     gathers EVERY event's struct inside the scan task(s) — serial
     list-building plus a shuffle of the built lists when the file
     layout under-splits; spreading first moves the same-sized shuffle

@@ -18,6 +18,8 @@ Golden numbers (BASELINE.md rows 1-10):
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,6 +32,16 @@ pytestmark = pytest.mark.golden
 
 DATA = "/root/reference/src/main/resources/datasets/univariate"
 DELTA = 0.05
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _reference_fixtures():
+    """Every test here reads the reference's bundled datasets. Without
+    them each test fails with this one named reason, not with a Py4J
+    trace from the first read; never a skip."""
+    for d in (DATA, MVDATA):
+        if not os.path.isdir(d):
+            pytest.fail(f"reference fixtures absent at {d}")
 
 
 def _load(spark, name):
@@ -124,7 +136,7 @@ def test_weasel_golden(spark, dataset, golden):
 @pytest.mark.parametrize(
     "dataset,golden,g_earl,earl_band,v3_parity",
     [
-        # r4 parity set (all fits now run-deterministic): OvR
+        # parity set (all fits run-deterministic): OvR
         # liblinear-style slave probabilities + java-Random(1)
         # contiguous CV folds, the 250-capped snapshot grid
         # (getMax(·, MAX_WINDOW_LENGTH), TEASERClassifier.java:36,142),

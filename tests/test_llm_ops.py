@@ -227,45 +227,49 @@ def test_cosine_topk_matches_numpy(spark):
         assert S[r["q_id"], r["nn_id"]] == pytest.approx(r["cosine"], abs=1e-9)
 
 
-def test_brute_cosine_gemm_matches_fold(spark, monkeypatch):
-    """r9: the Arrow GEMM scorer must return the SAME rows as the JVM
-    fold path — ids and ranks exactly, cosine to fp tolerance — for
-    both the plain top-k and the excl_pair (hard_negatives) shapes."""
-    rng = np.random.default_rng(11)
-    E = rng.normal(0, 1, (60, 16))
-    df = spark.createDataFrame(
+def test_similarity_paths_run_no_python_and_no_build_jobs(spark):
+    """cosine_topk, hard_negatives and ivf_assign (1 and 3 probes) each
+    have one JVM path: building the DataFrame runs no Spark job, and no
+    plan executed for it holds a Python-worker node. The centroid table
+    is a driver-side LocalRelation, as a fitted codebook is, so
+    ivf_assign's centroid collect is no job either."""
+    from plan_nodes import PYTHON_EXECS, CapturedPlans, class_name, plan_nodes
+    from sfa_spark.operators.sfa import local_frame
+
+    rng = np.random.default_rng(29)
+    E = rng.normal(0, 1, (40, 8))
+    emb = spark.createDataFrame(
         [(i, [float(x) for x in row], int(i % 3)) for i, row in enumerate(E)],
         "vec_id long, embedding array<double>, label int",
     )
+    cents = local_frame(
+        spark,
+        {"centroid_id": list(range(4)), "cvec": [[float(x) for x in E[j]] for j in range(4)]},
+        "centroid_id int, cvec array<double>",
+    )
+    queries = emb.where("vec_id < 4")
+    builders = {
+        "cosine_topk": lambda: similarity.cosine_topk(queries, emb, k=5),
+        "hard_negatives": lambda: similarity.hard_negatives(queries, emb, k=5),
+        "ivf_assign_1": lambda: similarity.ivf_assign(emb, cents, n_probes=1),
+        "ivf_assign_3": lambda: similarity.ivf_assign(emb, cents, n_probes=3),
+    }
+    sc = spark.sparkContext
+    for name, build in builders.items():
+        group = f"similarity-build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = build()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
 
-    def rows(res, keys):
-        return sorted(
-            (tuple(r[k] for k in keys), round(r["cosine"], 9))
-            for r in res.collect()
-        )
-
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM", "on")  # force: tiny corpus
-    gemm = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM", "off")
-    fold = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_GEMM")
-    assert rows(gemm, ("q_id", "nn_id", "rk")) == rows(fold, ("q_id", "nn_id", "rk"))
-
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM", "on")
-    gemm_hn = similarity.hard_negatives(df.where("vec_id < 4"), df, k=5)
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM", "off")
-    fold_hn = similarity.hard_negatives(df.where("vec_id < 4"), df, k=5)
-    ks = ("q_id", "q_label", "neg_id", "neg_label", "rk")
-    assert rows(gemm_hn, ks) == rows(fold_hn, ks)
-    # the exclusion really applied
-    assert all(r["q_label"] != r["neg_label"] for r in gemm_hn.collect())
-
-    # plan shapes: forced GEMM crosses the Arrow boundary; auto on a
-    # tiny corpus stays on the JVM fold (below SPARK_GRAFT_GEMM_MIN_BYTES)
-    assert "MapInArrow" in gemm._jdf.queryExecution().executedPlan().toString()
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_GEMM")
-    auto = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
-    assert "MapInArrow" not in auto._jdf.queryExecution().executedPlan().toString()
+        with CapturedPlans(spark) as cap:
+            assert df.collect()
+        names = {class_name(n) for p in cap.plans for n in plan_nodes(p)}
+        assert cap.plans, name
+        assert not names & set(PYTHON_EXECS), (name, names & set(PYTHON_EXECS))
 
 
 def test_bucketed_neighbors_subset_of_bucket(spark):
@@ -311,7 +315,7 @@ def test_scalar_quantize_recall(spark):
 
 def test_multiprobe_recall_beats_single_probe(spark):
     """Multi-probe (4 probes over 64 buckets) must reach recall@3 ≥ 0.9
-    vs brute force on the test corpus — the VERDICT round-2 target."""
+    vs brute force on the test corpus."""
     import numpy as np
 
     from sfa_spark.operators import similarity
@@ -452,7 +456,7 @@ def test_ivf_partitioned_write_prunes(spark, tmp_path):
 def test_ivf_assign_is_row_local(spark):
     """The IVF list assignment must plan with NO Exchange and NO Join:
     the centroid table inlines as literal arrays and the argmin is a
-    codegen'd array_min — the r2 crossJoin+window form exchanged
+    codegen'd array_min — a crossJoin+window form would exchange
     corpus×C rows for the same answer. Also checks the multi-probe
     ordering against numpy (dist asc, centroid_id asc ties)."""
     rng = np.random.default_rng(43)
@@ -479,36 +483,9 @@ def test_ivf_assign_is_row_local(spark):
         assert [c for _, c in sorted(got[i])] == [int(j) for j in order], i
 
 
-def test_ivf_assign_pandas_fallback_matches_literal(spark, monkeypatch):
-    """Above LITERAL_BUDGET centroids×dim the assignment switches to the
-    Arrow-batched pandas UDF — same (centroid_id, crk) output and still
-    zero Exchange/Join in the plan."""
-    rng = np.random.default_rng(47)
-    vecs = rng.normal(0, 1, (80, 8))
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    cents = similarity.kmeans_fit(emb, n_centroids=6, iters=2)
-    for probes in (1, 3):
-        lit = sorted(
-            (r["vec_id"], r["crk"], r["centroid_id"])
-            for r in similarity.ivf_assign(emb, cents, n_probes=probes).collect()
-        )
-        monkeypatch.setattr(similarity, "LITERAL_BUDGET", 1)
-        assigned = similarity.ivf_assign(emb, cents, n_probes=probes)
-        plan = assigned._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan and "Join" not in plan, plan
-        pdz = sorted(
-            (r["vec_id"], r["crk"], r["centroid_id"]) for r in assigned.collect()
-        )
-        monkeypatch.setattr(similarity, "LITERAL_BUDGET", 32768)
-        assert lit == pdz, probes
-
-
 def test_kmeans_fit_exact_limit_table_ok(spark):
     """A table with exactly sample_limit rows is full coverage — the
-    iters=0 oracle-contract assert must not fire (ADVICE r3)."""
+    iters=0 oracle-contract assert must not fire."""
     rng = np.random.default_rng(53)
     emb = spark.createDataFrame(
         [(i, [float(x) for x in rng.normal(0, 1, 4)]) for i in range(64)],
@@ -547,8 +524,8 @@ def test_dedup_groups_chain_converges(spark):
 
 def test_dedup_groups_raises_on_nonconvergence(spark):
     """An adversarial chain deeper than the iteration budget must FAIL
-    LOUDLY, never silently emit split groups (r2 verdict: the silent
-    stop at max_iter was the robustness gap)."""
+    LOUDLY, never silently emit split groups (a silent stop at
+    max_iter would be a robustness gap)."""
     import pytest
 
     pairs = spark.createDataFrame(
@@ -986,7 +963,7 @@ def test_ivfpq_partitioned_write_prunes(spark, emb_small, tmp_path):
     assert probed.count() > 0
 
 
-# ---------------------------------------------------------------- r4 curation ops
+# ---------------------------------------------------------------- curation ops
 
 
 def test_pii_redact_replaces_and_counts(spark):
@@ -1973,15 +1950,16 @@ def test_incremental_lsh_dedup_statuses(spark, docs):
         assert out[d] == want, (d, out[d], want)
 
 
-def test_shingles_shuffle_free_and_distinct(spark, monkeypatch):
-    """r8: shingles dedups per-row (array_distinct) instead of a global
+def test_shingles_shuffle_free_and_distinct(spark):
+    """shingles dedups per-row (array_distinct) instead of a global
     distinct() — rows must still be the distinct (doc_id, shingle)
-    pairs, and (with the r9 scan-spread guard disabled) the plan must
-    contain NO Exchange: the dedup itself is doc-local. The guard's
-    own behaviour is covered by test_sources.py::test_spread_scan_*."""
+    pairs, and the plan must hold no Exchange beyond the scan-spread
+    guard's own: the dedup itself is doc-local. The guard's behaviour
+    is covered by test_sources.py::test_spread_scan_*."""
+    from plan_nodes import class_name, executed_nodes
     from sfa_spark.operators.text import shingles
+    from sfa_spark.sources.events import spread_scan
 
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_SCAN", "off")
     docs = spark.createDataFrame(
         [
             (1, "a b c a b c a b c"),  # duplicate shingles within doc
@@ -1997,7 +1975,10 @@ def test_shingles_shuffle_free_and_distinct(spark, monkeypatch):
         (2, "a b c"), (2, "b c d"),
     }
     assert sh.count() == 5  # per-row dedup collapsed the repeats
-    plan = sh._sc._jvm.PythonSQLUtils.explainString(
-        sh._jdf.queryExecution(), "formatted"
-    )
-    assert "Exchange" not in plan
+
+    def exchanges(df):
+        return sum(class_name(n).endswith("ExchangeExec") for n in executed_nodes(df))
+
+    spread = spread_scan(docs, "doc_id")
+    spread.collect()
+    assert exchanges(sh) <= exchanges(spread)

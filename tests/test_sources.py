@@ -305,7 +305,7 @@ def test_read_evolved_parquet_null_fills_old_files(spark, tmp_path):
 
 
 def test_series_arrays_from_events_matches_long_path(spark):
-    """The direct events→arrays gather (r8 fast path: sort_array over
+    """The direct events→arrays gather (fast path: sort_array over
     (ts, event_id, value) structs, no row_number window) must be
     value-identical to series_to_arrays(series_from_events(...)) —
     including tie-breaking on duplicate ts within a series."""
@@ -358,17 +358,14 @@ def test_spread_scan_under_split_scan_repartitions(spark, sf_dir):
     assert a == b
 
 
-def test_spread_scan_identity_when_parallel_or_disabled(spark, sf_dir, monkeypatch):
+def test_spread_scan_identity_when_parallel(spark, sf_dir):
     """The guard is the identity when the input already has enough
-    partitions (the cluster-scale case) and when disabled by env."""
+    partitions (the cluster-scale case)."""
     from sfa_spark.sources.events import load_table, spread_scan
 
     docs = load_table(spark, sf_dir, "documents")
     wide = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     assert spread_scan(wide, "doc_id") is wide
-
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_SCAN", "off")
-    assert spread_scan(docs, "doc_id") is docs
 
 
 def test_spread_probe_memo_keeps_current_app_and_caps(spark, sf_dir, monkeypatch):
